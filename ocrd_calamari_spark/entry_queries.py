@@ -33,19 +33,6 @@ from ocrd_calamari_spark.pipeline import extract_df
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Scan-parallelism floor (guide §6): each fixture table is ONE parquet
-    # file, so at the default 128 MB maxPartitionBytes every map stage
-    # before the first exchange runs on ≤2 scan splits — measured 29 s of
-    # trigram shingling on 2 of 32 cores in jaccard_dedup at sf1.0.  The
-    # floor derives from the session's core count (never a constant), and
-    # at production scale — thousands of splits — it is a no-op: Spark
-    # takes max(bytes/minPartitionNum, openCost) capped by
-    # maxPartitionBytes, so it can only SPLIT small inputs finer, never
-    # coarsen large ones.
-    spark.conf.set(
-        "spark.sql.files.minPartitionNum",
-        str(2 * spark.sparkContext.defaultParallelism),
-    )
     # InferFiltersFromGenerate synthesizes a `size(arr) > 0` filter under
     # every explode and predicate-pushdown then sinks it below
     # repartitions onto the scan — re-evaluating the full gram/shingle
@@ -55,7 +42,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # array is empty — explode drops them anyway — so excluding the rule
     # trades a no-op pruning for not re-running heavy expressions at the
     # scan; that trade is scale-independent (the duplicated evaluation
-    # costs MORE at larger inputs, never less).
+    # costs MORE at larger inputs, never less).  Setting it per read is
+    # idempotent and is the only hook into the caller's session.
     spark.conf.set(
         "spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
@@ -63,21 +51,23 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _tw(spark: SparkSession, sf_dir: str, name: str = "documents") -> DataFrame:
-    """``_t`` plus an up-front hash repartition on doc_id.
+def _spread(df: DataFrame) -> DataFrame:
+    """The one input-spreading rule: hash-repartition on doc_id to four
+    partitions per core.
 
-    The fixture table is ONE small parquet file; even under the
-    minPartitionNum floor, openCostInBytes floors the split size, so the
-    5.9 MB documents file still scans as ~2 splits — and every heavy
-    per-row map (explode + md5/xxhash per gram) before the first exchange
-    then runs on 2 of N cores (measured: dsir_weights 14.1 s isolated at
-    sf1.0, almost all in the 2-task scan stage).  The narrow-input
-    exchange costs ~25 MB; at production scale the scan has thousands of
-    splits and this repartition is a no-op-grade overhead (same pattern
-    as _with_injected_dups, CLAUDE.md round-4 note)."""
-    return _t(spark, sf_dir, name).repartition(
-        4 * spark.sparkContext.defaultParallelism, "doc_id"
+    Every fixture table is one parquet file with one row group, so it
+    scans as one non-empty split, and every heavy per-row map (explode +
+    md5/xxhash per gram) before the first exchange would run on one core
+    (measured: dsir_weights 14.1 s isolated at sf1.0, almost all in the
+    scan stage)."""
+    return df.repartition(
+        4 * df.sparkSession.sparkContext.defaultParallelism, "doc_id"
     )
+
+
+def _tw(spark: SparkSession, sf_dir: str, name: str = "documents") -> DataFrame:
+    """``_t`` then ``_spread``."""
+    return _spread(_t(spark, sf_dir, name))
 
 
 def _psort(df: DataFrame, *cols) -> DataFrame:
@@ -726,10 +716,6 @@ FROM ranked WHERE rank <= 10
 # Deterministic near-dups are injected by unioning mutated copies.
 # ---------------------------------------------------------------------------
 def _with_injected_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The sf documents table is ONE parquet file → one scan split; without
-    # an up-front repartition every per-document stage (shingling, minhash
-    # fold, simhash fold) serializes onto a single core.  At production
-    # scale the corpus arrives pre-split; this mirrors that shape.
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     dups = (
         d.where(F.col("doc_id") < 40)
@@ -738,15 +724,13 @@ def _with_injected_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.col("text"), F.lit(" extra tail token")).alias("text"),
         )
     )
-    # repartition AFTER the union (r06): repartitioning the base before
-    # it gave 128 + 128 = 256 non-coalescible partitions to every
-    # downstream stage of every dedup query — the minhash event log
-    # showed ~11 near-empty 256/512-task stages whose only cost was task
-    # scheduling (~2 ms × thousands of tasks).  One post-union exchange
-    # halves every stage's task count at identical spreading.
-    return d.unionByName(dups).repartition(
-        4 * spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    # spread AFTER the union (r06): spreading the base before it gave
+    # 128 + 128 = 256 non-coalescible partitions to every downstream
+    # stage of every dedup query — the minhash event log showed ~11
+    # near-empty 256/512-task stages whose only cost was task scheduling
+    # (~2 ms × thousands of tasks).  One post-union exchange halves
+    # every stage's task count at identical spreading.
+    return d.unionByName(dups).transform(_spread)
 
 
 def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -816,7 +800,7 @@ def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         _t(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .repartition(4 * spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(_spread)
     )
     pct = (
         F.when(F.col("doc_id") % 5 == 0, 55)
@@ -917,7 +901,7 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         _t(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .repartition(4 * spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(_spread)
     )
     new = d.where(F.col("doc_id") < 40).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
@@ -1154,24 +1138,6 @@ GROUP BY 1
 HAVING COUNT(*) > 1
 ORDER BY fp
 """
-
-
-def q_cosine_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same exact top-k as cosine_topk, via the vectorized numpy scorer
-    with per-batch local top-k (the scale path) — shares the SQL oracle."""
-    from ocrd_calamari_spark.functions.simsearch import brute_force_topk_pandas
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = brute_force_topk_pandas(emb, queries, k=10)
-    return out.select(
-        "query_id",
-        "vec_id",
-        F.round("cosine_sim", 4).alias("cosine_sim"),
-        F.col("rank").cast("bigint").alias("rank"),
-    )
 
 
 def q_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1447,7 +1413,7 @@ def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         _t(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .repartition(4 * spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(_spread)
     )
     kind = F.element_at(
         F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
@@ -1753,17 +1719,12 @@ ORDER BY doc_id, chunk_no
 def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signals per document (duplicate
     2-gram fraction, top-2-gram coverage) — one shuffle-free JVM map; the
-    top-gram count is a sorted-run aggregate() fold, no per-doc groupBy.
-
-    The fixture table is ONE parquet file (≤2 scan splits), so the
-    heavy-per-row HOF map is re-parallelized up front — at production
-    scale the scan itself is thousands of splits and this repartition
-    disappears (measured: 6.8 s → 1.7 s at sf0.1 on 32 cores)."""
+    top-gram count is a sorted-run aggregate() fold, no per-doc groupBy."""
     from ocrd_calamari_spark.functions.text import repetition_stats
 
     d = (
         _t(spark, sf_dir, "documents").select("doc_id", "text")
-        .repartition(4 * spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(_spread)
     )
     out = repetition_stats(d, "doc_id", "text", n=2)
     quant = lambda c: (F.floor(F.col(c) * F.lit(1e4) + F.lit(0.5))
@@ -1813,11 +1774,9 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams broadcast; the corpus text never shuffles."""
     from ocrd_calamari_spark.functions.dedup import decontaminate
 
-    # single-file fixture → re-parallelize before the per-row gram explode
-    # (real tables scan as many splits; see q_repetition_quality)
     d = (
         _t(spark, sf_dir, "documents").select("doc_id", "text")
-        .repartition(4 * spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(_spread)
     )
     benchmark = d.where(F.col("doc_id") % 97 == 0)
     leak = benchmark.where(F.col("doc_id") == 0).select(
@@ -1884,7 +1843,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = (
         _t(spark, sf_dir, "documents").select("doc_id", "text")
-        .repartition(4 * spark.sparkContext.defaultParallelism, "doc_id")
+        .transform(_spread)
     )
     benchmark = d.where(F.col("doc_id") % 97 == 0)
     leak = benchmark.where(F.col("doc_id") == 0).select(
@@ -3529,7 +3488,9 @@ def q_domain_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent, hence partitioning-invariant AND hash-exact)."""
     from ocrd_calamari_spark.functions.text import domain_divergence
 
-    return domain_divergence(_tw(spark, sf_dir, "documents"))
+    return domain_divergence(_tw(spark, sf_dir, "documents")).transform(
+        _psort, "domain"
+    )
 
 
 DOMAIN_DIVERGENCE_SQL = r"""
@@ -6579,8 +6540,9 @@ QUERIES = {
     "resample_plan": q_resample_plan,
     # (cosine_topk_pandas retired from the registry per the round-3
     # verdict — it duplicated cosine_topk's oracle check and displaced a
-    # never-proven key from the driver's 50-entry sample window; the
-    # function and its pytest coverage remain.)
+    # never-proven key from the driver's 50-entry sample window; its
+    # scorer, simsearch.brute_force_topk_pandas, keeps its pytest
+    # coverage.)
     # embedding_near_dupes gained its DuckDB oracle after its only driver
     # appearance (r01, rows-only) — its first hash-checkable shot is here.
     "embedding_near_dupes": q_embedding_near_dupes,

@@ -613,16 +613,10 @@ def domain_divergence(df, domain_col: str = "source",
             f"cast(floor(({term}) * 1e12 + 5e-1) as decimal(38,0))"
         ).alias("q"),
     )
-    return (
-        q.groupBy("domain")
-        .agg(
-            F.expr(
-                "cast(1e0 + cast(sum(q) as double) / 1e12 as double)"
-            ).alias("chi2")
-        )
-        # single-partition presentation sort: orderBy's range exchange
-        # would re-execute the aggregation for boundary sampling
-        .repartition(1).sortWithinPartitions("domain")
+    return q.groupBy("domain").agg(
+        F.expr(
+            "cast(1e0 + cast(sum(q) as double) / 1e12 as double)"
+        ).alias("chi2")
     )
 
 

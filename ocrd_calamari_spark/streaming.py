@@ -14,8 +14,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ocrd_calamari_spark.config import ExtractConfig
-from ocrd_calamari_spark.kernel.extract import make_map_fn
-from ocrd_calamari_spark.schema import KERNEL_INPUT_COLS, OUTPUT_SCHEMA, PAGES_SCHEMA
+from ocrd_calamari_spark.pipeline import extract_df
+from ocrd_calamari_spark.schema import PAGES_SCHEMA
 
 def read_pages_stream(spark: SparkSession, in_dir: str,
                       max_files_per_trigger: int = 8) -> DataFrame:
@@ -29,15 +29,9 @@ def read_pages_stream(spark: SparkSession, in_dir: str,
 
 def extract_stream(pages: DataFrame, cfg: ExtractConfig | None = None) -> DataFrame:
     """Streaming extraction: identical kernel, streaming micro-batches."""
-    cfg = cfg or ExtractConfig()
-    from pyspark.sql.types import StructType
-
-    out_schema = StructType(
-        [f for f in OUTPUT_SCHEMA.fields if f.name != "lineage"]
-    )
-    return pages.select(*KERNEL_INPUT_COLS).mapInPandas(
-        make_map_fn(cfg), out_schema
-    )
+    return extract_df(
+        pages, cfg, with_lineage=False, repartition=False
+    ).drop("lineage")
 
 
 def start_extraction_stream(

@@ -4,13 +4,23 @@ partial agg, no spurious exchanges).  tests/test_plans.py asserts the same
 properties; this artifact makes them reviewable without running Spark.
 
     python scripts/show_plans.py [sf_dir]
+
+``--fingerprints`` instead prints one line per registry key: the key and
+a sha1 of its physical plan (``explain()``) with expression ids,
+``plan_id=`` values and adaptive query-stage / codegen-stage numbers
+normalized away.  Two trees build the same plans iff the two outputs
+diff clean; PLANS.md is not written in this mode.
+
+    python scripts/show_plans.py --fingerprints [sf_dir]
 """
 
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -30,8 +40,57 @@ def plan_of(df, mode="formatted") -> str:
     return buf.getvalue()
 
 
+_NORMALIZE = (
+    (re.compile(r"#\d+L?"), "#"),  # expression ids
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    # adaptive stages finish in a race, so their numbering varies per run
+    (re.compile(r"QueryStage \d+"), "QueryStage"),
+    (re.compile(r"\*\(\d+\)"), "*()"),
+)
+# Expression ids handed out before each key's plan.  The optimizer
+# orders some expressions (the distinct-aggregate rewrite) by id hash,
+# so a key's plan text depends on how many ids earlier keys used; each
+# key therefore starts from a fixed id.
+_EXPR_ID_STRIDE = 10_000_000
+
+
+def fingerprint(df) -> str:
+    """sha1 of the physical plan, independent of run-to-run numbering."""
+    plan = plan_of(df, "simple")
+    for pattern, repl in _NORMALIZE:
+        plan = pattern.sub(repl, plan)
+    return hashlib.sha1(plan.encode()).hexdigest()
+
+
+def set_next_expr_id(spark, next_id: int) -> None:
+    """Move the JVM-wide expression-id counter forward to ``next_id``.
+
+    The counter is a private static AtomicLong; py4j would hand it back
+    as a plain int, so its ``set`` is bound to the field getter with
+    method handles and called inside the JVM."""
+    jvm = spark.sparkContext._jvm
+    if jvm.org.apache.spark.sql.catalyst.expressions.NamedExpression \
+            .newExprId().id() > next_id:
+        raise RuntimeError(f"expression ids already past {next_id}")
+    mh = jvm.java.lang.invoke.MethodHandles
+    owner = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.NamedExpression$")
+    atomic = jvm.java.lang.Class.forName("java.util.concurrent.atomic.AtomicLong")
+    getter = mh.privateLookupIn(owner, mh.lookup()).findStaticGetter(
+        owner, "curId", atomic)
+    setter = mh.lookup().findVirtual(
+        atomic, "set", jvm.java.lang.invoke.MethodType.methodType(
+            jvm.java.lang.Void.TYPE, jvm.java.lang.Long.TYPE))
+    args = spark.sparkContext._gateway.new_array(jvm.java.lang.Object, 1)
+    args[0] = next_id
+    mh.collectArguments(setter, 0, getter).invokeWithArguments(args)
+
+
 def main():
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    args = sys.argv[1:]
+    fingerprints = "--fingerprints" in args
+    args = [a for a in args if a != "--fingerprints"]
+    sf = args[0] if args else "/root/testdata/sf0.01"
     from pyspark.sql import SparkSession
 
     from ocrd_calamari_spark.config import ExtractConfig
@@ -44,9 +103,19 @@ def main():
         SparkSession.builder.master("local[4]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
+        # building every registry plan in one session runs pagerank's
+        # iterations, which exhaust the default 1g driver heap
+        .config("spark.driver.memory", "4g")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+
+    if fingerprints:
+        for i, (key, fn) in enumerate(QUERIES.items(), 1):
+            set_next_expr_id(spark, i * _EXPR_ID_STRIDE)
+            print(key, fingerprint(fn(spark, sf)), flush=True)
+        spark.stop()
+        return
 
     sections = []
 

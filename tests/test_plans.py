@@ -624,3 +624,26 @@ class TestRound4LateOpPlans:
         assert "partial_count" in plan
         assert "CartesianProduct" not in plan
         assert "Python" not in plan
+
+
+class TestScanRule:
+    """Registry reads go through ``_t``; ``_spread`` adds the one doc_id
+    exchange, and no read touches the caller's split settings."""
+
+    def test_single_file_input_is_spread_once(self, spark):
+        from ocrd_calamari_spark.entry_queries import _tw
+
+        plan = plan_of(_tw(spark, SF), "simple")
+        assert plan.count("hashpartitioning(doc_id") == 1
+
+    def test_registry_key_keeps_caller_split_floor(self, spark):
+        from ocrd_calamari_spark.entry_queries import QUERIES
+
+        conf = "spark.sql.files.minPartitionNum"
+        spark.conf.set(conf, "3")
+        try:
+            for key in ("q1_pricing_summary", "repetition_quality"):
+                QUERIES[key](spark, SF).collect()
+                assert spark.conf.get(conf) == "3", key
+        finally:
+            spark.conf.unset(conf)

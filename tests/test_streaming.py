@@ -61,6 +61,17 @@ class TestStreamingExtraction:
         ok = joined[joined["text_o"].notna()]
         assert (ok["text_o"] == ok["text"]).all()
 
+    def test_stream_schema_is_output_without_lineage(self, spark, stream_dirs):
+        from pyspark.sql.types import StructType
+
+        from ocrd_calamari_spark.schema import OUTPUT_SCHEMA
+        from ocrd_calamari_spark.streaming import extract_stream
+
+        out = extract_stream(read_pages_stream(spark, stream_dirs["in"]))
+        assert out.schema == StructType(
+            [f for f in OUTPUT_SCHEMA.fields if f.name != "lineage"]
+        )
+
     def test_windowed_host_stats(self, spark, stream_dirs):
         pages = read_pages_stream(spark, stream_dirs["in"])
         stats = hourly_host_stats_stream(pages)
